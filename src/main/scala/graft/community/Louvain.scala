@@ -71,7 +71,10 @@ object Louvain {
     // dyadic rational (unit counts halved per level), so sums are exact in
     // double regardless of order, and string tie-breaks use UTF-8 byte
     // order exactly like Spark's UTF8String comparison.
-    if (edges.limit((localFinishEdges + 1).toInt).count() <= localFinishEdges) {
+    // the probe limit is an Int: cap the bound so `bound + 1` cannot
+    // overflow (a driver array holds < Int.MaxValue edges anyway)
+    val bound = math.min(localFinishEdges, Int.MaxValue - 1L)
+    if (edges.limit((bound + 1).toInt).count() <= bound) {
       val nodeArr = nodes.select($"id", $"k", $"k_self")
         .as[(String, Double, Double)].collect()
       val edgeArr = edges.select($"src", $"dst", $"w")

@@ -88,7 +88,10 @@ final case class Community(community_id: String, iteration: Int, description: St
 final case class InCommunity(canonical_id: String, community_id: String)
 
 /** Per-stage lineage row — enables checkpoint resume and makes
-  * silently-dropped rows countable (SURVEY.md §4 table last row).
+  * silently-dropped rows countable (SURVEY.md §4 table last row). It is the
+  * stage's commit record, appended after the stage's file-metrics rows;
+  * `wall_ms` spans the build plus the per-file audit, and `finished_at` is
+  * shared with those [[FileMetricsRow]]s.
   */
 final case class LineageRow(
     run_id: String,
@@ -101,8 +104,11 @@ final case class LineageRow(
 /** Per-output-file (= per final write partition) metrics row for one stage
   * commit — the north rule's "per-partition lineage + metrics". Row count and
   * byte size per file make output skew visible (one hot entity bucket shows
-  * up as one fat file), let a resumed run audit exactly which partitions a
-  * stage committed, and cost one footer-cheap job per stage to collect.
+  * up as one fat file) and let a resumed run audit exactly which partitions a
+  * stage committed. Collected from the FS listing and parquet footers on the
+  * driver, no Spark job. Rows whose `finished_at` matches no [[LineageRow]]
+  * of the same run and stage belong to an attempt that crashed before its
+  * commit.
   */
 final case class FileMetricsRow(
     run_id: String,

@@ -1,9 +1,19 @@
 package graft.pipeline
 
 import java.sql.Timestamp
+import java.util.UUID
 
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.model.{FileMetricsRow, LineageRow}
 
@@ -440,11 +450,10 @@ final class Catalog(val root: String, val spark: SparkSession) {
 
   private def lineagePath = s"$root/_lineage"
 
-  def appendLineage(row: LineageRow): Unit = {
-    import spark.implicits._
-    Seq(row).toDS().toDF().coalesce(1)
-      .write.mode(SaveMode.Append).parquet(lineagePath)
-  }
+  /** Append one stage-level row. Written on the driver ([[appendRows]]):
+    * no Spark job, so a stage's bookkeeping adds no scheduling latency.
+    */
+  def appendLineage(row: LineageRow): Unit = appendRows(lineagePath, Seq(row))
 
   def lineage(): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(lineagePath)
@@ -455,39 +464,70 @@ final class Catalog(val root: String, val spark: SparkSession) {
 
   private def fileMetricsPath = s"$root/_lineage_files"
 
-  /** Per-partition metrics for a committed stage table (north rule:
-    * "per-partition lineage + metrics"): one row per output file with its
-    * row count (one group-by-`input_file_name` job over an empty projection
-    * — the vectorized parquet reader never materializes data columns) and
-    * byte size from the recursive FS listing (bucketed tables live under
-    * `_bucket=N/` subdirs). The collect is bounded by the FILE count, never
-    * the row count — at warehouse scale that is O(partitions), the same
-    * cardinality Iceberg's manifest metadata carries.
+  /** (file, rows, bytes) of every data file of a committed table (north
+    * rule: "per-partition lineage + metrics"), without a Spark job: the
+    * recursive FS listing gives each file's byte size and its parquet footer
+    * the row count. `file` is the path relative to the table dir — the bare
+    * file name for flat tables, `_bucket=N/<name>` for bucketed ones, whose
+    * buckets each hold a file of the same name per write task. The files
+    * are the ones a scan of the table reads — path components hidden by
+    * Spark's file index (`_`/`.` prefix, except `key=value` partition dirs)
+    * are skipped — and, as a group-by over the scan would, 0-row files are
+    * left out. Cost is one footer read per file: O(partitions), the same
+    * cardinality Iceberg's manifest metadata carries, never O(rows).
     */
-  def appendFileMetrics(runId: String, stage: String, table: String = null): Unit = {
-    val tbl = Option(table).getOrElse(stage)
-    if (!exists(tbl)) return
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path(tbl))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sizes = scala.collection.mutable.Map.empty[String, Long]
-    val it = fs.listFiles(p, true)
+  def fileStats(table: String): Seq[(String, Long, Long)] = {
+    val base = new org.apache.hadoop.fs.Path(path(table))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = base.getFileSystem(conf)
+    val basePrefix = fs.makeQualified(base).toUri.getPath.stripSuffix("/") + "/"
+    def hidden(c: String) = c.startsWith(".") || (c.startsWith("_") && !c.contains("="))
+    val out = Seq.newBuilder[(String, Long, Long)]
+    val it = fs.listFiles(base, true)
     while (it.hasNext) {
       val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet"))
-        sizes(st.getPath.getName) = st.getLen
-    }
-    val ts = new Timestamp(System.currentTimeMillis())
-    val perFile = spark.read.parquet(path(tbl))
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("rows"))
-      .collect()
-      .map { r =>
-        val name = r.getString(0).split('/').last
-        FileMetricsRow(runId, stage, name, r.getLong(1), sizes.getOrElse(name, -1L), ts)
+      val rel = st.getPath.toUri.getPath.stripPrefix(basePrefix)
+      if (!rel.split('/').exists(hidden)) {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val rows = try reader.getRecordCount finally reader.close()
+        if (rows > 0) out += ((rel, rows, st.getLen))
       }
-    spark.createDataset(perFile.toSeq).toDF().coalesce(1)
-      .write.mode(SaveMode.Append).parquet(fileMetricsPath)
+    }
+    out.result()
+  }
+
+  /** Append per-file metrics rows (see [[fileStats]]), on the driver like
+    * [[appendLineage]]. An empty batch writes nothing.
+    */
+  def appendFileMetrics(rows: Seq[FileMetricsRow]): Unit =
+    if (rows.nonEmpty) appendRows(fileMetricsPath, rows)
+
+  /** Append `rows` to a parquet table directory as ONE new file, written on
+    * the driver through Spark's own parquet writer factory — the same
+    * schema, footer metadata and codec a `write.mode(Append)` of the same
+    * rows would produce, without scheduling a job. The file is written under
+    * a hidden in-progress name (readers skip it) and renamed into place, so
+    * a reader never sees a partial file.
+    */
+  private def appendRows[T <: Product: TypeTag](dir: String, rows: Seq[T]): Unit = {
+    val enc = ExpressionEncoder[T]()
+    val schema = enc.schema
+    val sqlConf = SQLConf.get
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration) // copies the conf
+    val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    val attempt = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, attempt)
+    val name = s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.inprogress")
+    val writer = factory.newInstance(tmp.toString, schema, ctx)
+    try {
+      val toRow = enc.createSerializer()
+      rows.foreach(r => writer.write(toRow(r)))
+    } finally writer.close()
+    val fs = tmp.getFileSystem(job.getConfiguration)
+    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(dir, name)),
+      s"append to $dir: failed to rename $tmp into place")
   }
 
   def fileMetrics(): DataFrame = {
@@ -514,6 +554,15 @@ object Catalog {
   /** Run one stage with lineage + resume. `build` must WRITE table
     * `tableName` (defaults to the stage name; incremental stages pass the
     * standing table they merged into) via the catalog before returning.
+    *
+    * Bookkeeping runs no Spark job. After `build`, the committed table's
+    * per-file stats are read ([[Catalog.fileStats]]), then ONE `finished_at`
+    * is stamped for both lineage tables — `wall_ms` covers the build plus
+    * that per-file audit. The file rows are appended first and the lineage
+    * row LAST: the lineage row is the stage's commit record. A crash
+    * between the two appends leaves file rows whose `finished_at` matches
+    * no lineage row (and no resume skip), so the retry's rows are the ones
+    * that join to the lineage.
     */
   def stage(cat: Catalog, runId: String, stageName: String, fingerprint: String, resume: Boolean,
       tableName: String = null)(
@@ -523,13 +572,14 @@ object Catalog {
     } else {
       val t0 = System.nanoTime()
       val rows = build
+      val table = Option(tableName).getOrElse(stageName)
+      val files = if (cat.exists(table)) cat.fileStats(table) else Nil
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      cat.appendLineage(LineageRow(runId, stageName, fingerprint, rows, wallMs,
-        new Timestamp(System.currentTimeMillis())))
-      // per-partition metrics (north rule): file-level rows/bytes, appended
-      // after the stage-level row so a crash mid-metrics never orphans a
-      // lineage-less table
-      cat.appendFileMetrics(runId, stageName, Option(tableName).getOrElse(stageName))
+      val finishedAt = new Timestamp(System.currentTimeMillis())
+      cat.appendFileMetrics(files.map { case (file, n, bytes) =>
+        FileMetricsRow(runId, stageName, file, n, bytes, finishedAt)
+      })
+      cat.appendLineage(LineageRow(runId, stageName, fingerprint, rows, wallMs, finishedAt))
       StageResult(stageName, skipped = false, rows = rows, wallMs = wallMs)
     }
   }

@@ -44,7 +44,7 @@ object ErProfile {
     val emb = Resolution.embedEntities(entities, p).localCheckpoint(true)
 
     val sigs = time("sign (240 dots x 1536)") {
-      Resolution.debugSigs(emb, p).localCheckpoint(true)
+      Resolution.signatures(emb, p).localCheckpoint(true)
     }
     println(s"  sig rows: ${sigs.count()}")
     val bucketed = time("bucket window cap") {

@@ -210,6 +210,25 @@ object ExplainAudit {
         "the per-entity mapping broadcasts; triples never sort-merge",
         mustNotContain = Seq("SortMergeJoin")),
 
+      Check("ER sparse probe is a CollectLimit over the parallel map",
+        s => {
+          import s.implicits._
+          // a parquet-backed table like the catalog's `embeddings` (a local
+          // relation would fold the limit into the data at plan time)
+          val e = new graft.extract.HashEmbedder(64, 42)
+          val dir = java.nio.file.Files.createTempDirectory("graft-probe-audit").toString
+          (0 until 200).map(i => (s"e$i", e.embed(s"token$i other${i % 7}")))
+            .toDF("entity_id", "embedding").repartition(4)
+            .write.mode("overwrite").parquet(dir)
+          graft.resolve.Resolution.sparseProbe(s.read.parquet(dir), maxRows = 1000).toDF()
+        },
+        // the limit must stay ABOVE the sparsifying map: limit-before-map
+        // plans a GlobalLimit behind a single-partition exchange that
+        // funnels the whole dense table through one task (+38% chain wall)
+        Seq("CollectLimit", "MapPartitions"),
+        "the probe's limit is terminal; sparsifying stays a parallel narrow map",
+        mustNotContain = Seq("GlobalLimit", "Exchange SinglePartition")),
+
       Check("as-of join is one window pass, never a nested-loop join",
         s => graft.SparkEntry.queries("q_asof_join")(s, sfDir),
         // the union+carry-forward formulation must plan as Window over ONE

@@ -133,7 +133,10 @@ object Resolution {
 
   private def log2(x: Double): Double = math.log(x) / math.log(2.0)
 
-  /** Signature rows (entity_id, band, sig) — exposed for plan debugging.
+  /** Sign-RP band signature rows (entity_id, band, sig) — the hyperplanes
+    * and banding [[candidatePairs]] blocks on, exposed so incremental runs
+    * can PERSIST the blocking index (lsh_sigs table) and re-sign only
+    * changed entities.
     *
     * Sparse-aware signing: the deterministic [[graft.extract.HashEmbedder]]
     * emits vectors with nnz ≈ token count (~13 of 1536), so computing the
@@ -144,7 +147,7 @@ object Resolution {
     * nonzero terms are accumulated in the same index order. Dense vectors
     * (a real embedding model) degrade only by the single gather pass.
     */
-  def debugSigs(embeddings: DataFrame, p: Params): DataFrame = {
+  def signatures(embeddings: DataFrame, p: Params): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val planes = spark.sparkContext.broadcast(hyperplanes(p))
@@ -201,7 +204,7 @@ object Resolution {
         val b = embeddings.select($"entity_id".as("dst"), $"embedding".as("emb_b"))
         a.crossJoin(b).where($"src" < $"dst")
       } else {
-        val sigs = debugSigs(embeddings, p)
+        val sigs = signatures(embeddings, p)
 
         // drop degenerate buckets (near-duplicate floods) before the self-join
         val bucketed = sigs
@@ -238,43 +241,14 @@ object Resolution {
           }
           .getOrElse(p.maxBroadcastBytes)
         val maxRows = (bcBytes / (p.dim.toLong * 4L)).toInt
-        // r5: the probe ships SPARSE (nnz index/value pairs when that's the
-        // smaller encoding, dense otherwise) with the squared norm hoisted
-        // per entity — the deterministic HashEmbedder runs nnz ≈ 13 of
-        // 1536, so the collect + broadcast shrink ~50-100× and per-pair
-        // scoring drops the two norm loops. This is serial driver work on
-        // the chain's critical path (the Amdahl F term in the scaling
-        // ladder). maxRows keeps the DENSE byte accounting so the
-        // map-side/shuffle switch point — and every plan at every scale —
-        // is unchanged. Bit-equality with the dense loop: see [[cosProbe]].
-        // ORDER MATTERS: limit must come AFTER the sparsifying map so the
-        // plan stays a terminal CollectLimitExec over a parallel narrow map
-        // — limit-before-map plans a GlobalLimit single-partition shuffle
-        // that funnels the whole DENSE table through one task (measured
-        // +38% on the 4×4-executor chain wall before this ordering).
-        val probe = embeddings.as[(String, Array[Float])]
-          .mapPartitions(_.map { case (id, v) =>
-            var nnz = 0
-            var i = 0
-            while (i < v.length) { if (v(i) != 0f) nnz += 1; i += 1 }
-            if (nnz.toLong * 2 <= v.length) {
-              val idx = new Array[Int](nnz)
-              val vals = new Array[Float](nnz)
-              var j = 0
-              i = 0
-              while (i < v.length) {
-                if (v(i) != 0f) { idx(j) = i; vals(j) = v(i); j += 1 }
-                i += 1
-              }
-              (id, v.length, idx, vals)
-            } else (id, v.length, null: Array[Int], v)
-          })
-          .limit(maxRows + 1)
-          .collect()
+        // r5: the probe ships SPARSE (see [[sparseProbe]]). maxRows keeps
+        // the DENSE byte accounting so the map-side/shuffle switch point —
+        // and every plan at every scale — is unchanged.
+        val probe = sparseProbe(embeddings, maxRows).collect()
         if (probe.length <= maxRows) {
           val vecMap = spark.sparkContext.broadcast(
             probe.iterator.map { case (id, len, idx, vals) =>
-              id -> mkProbeVec(len, idx, vals)
+              id -> mkProbeVec(p.dim, len, idx, vals)
             }.toMap)
           val thr = p.cosineThreshold - 1e-6
           return raw.as[(String, String)]
@@ -309,6 +283,46 @@ object Resolution {
       .select($"src", $"dst", $"cos")
 
     symTopK(scored, p)
+  }
+
+  /** The ER scoring probe: (entity_id, length, idx, vals) per embedding,
+    * at most `maxRows + 1` rows. Each vector ships SPARSE (nnz index/value
+    * pairs; `idx` null and `vals` dense when that is the smaller encoding)
+    * — the deterministic HashEmbedder runs nnz ≈ 13 of 1536, so the collect
+    * + broadcast shrink ~50-100× and, with the squared norm hoisted per
+    * entity ([[mkProbeVec]]), per-pair scoring drops the two norm loops.
+    * This is serial driver work on the chain's critical path (the Amdahl F
+    * term in the scaling ladder). Bit-equality with the dense loop: see
+    * [[cosProbe]].
+    *
+    * ORDER MATTERS: limit comes AFTER the sparsifying map so the plan stays
+    * a terminal CollectLimitExec over a parallel narrow map — limit-before-
+    * map plans a GlobalLimit single-partition shuffle that funnels the whole
+    * DENSE table through one task (measured +38% on the 4×4-executor chain
+    * wall before this ordering; guarded by ExplainAudit).
+    */
+  private[graft] def sparseProbe(embeddings: DataFrame, maxRows: Int)
+      : Dataset[(String, Int, Array[Int], Array[Float])] = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    embeddings.as[(String, Array[Float])]
+      .mapPartitions(_.map { case (id, v) =>
+        var nnz = 0
+        var i = 0
+        while (i < v.length) { if (v(i) != 0f) nnz += 1; i += 1 }
+        if (nnz.toLong * 2 <= v.length) {
+          val idx = new Array[Int](nnz)
+          val vals = new Array[Float](nnz)
+          var j = 0
+          i = 0
+          while (i < v.length) {
+            if (v(i) != 0f) { idx(j) = i; vals(j) = v(i); j += 1 }
+            i += 1
+          }
+          (id, v.length, idx, vals)
+        } else (id, v.length, null: Array[Int], v)
+      })
+      .limit(maxRows + 1)
   }
 
   /** Both directions, then top-(k−1) per src: self always occupies one slot
@@ -346,7 +360,9 @@ object Resolution {
   private final case class ProbeVec(len: Int, norm2: Double,
       idx: Array[Int], vals: Array[Float], dense: Array[Float])
 
-  private def mkProbeVec(len: Int, idx: Array[Int], vals: Array[Float]): ProbeVec = {
+  private def mkProbeVec(dim: Int, len: Int, idx: Array[Int], vals: Array[Float]): ProbeVec = {
+    require(len == dim, s"ER probe vector has length $len, expected p.dim = $dim — " +
+      "the hoisted norm is only valid when every embedding has length p.dim")
     // Σx² over the shipped values in index order — for a sparse row that
     // skips only exact-zero addends of the dense accumulation, so the value
     // is bit-equal to cosRawOrdered's na (a +0.0 addend is an IEEE identity
@@ -397,13 +413,6 @@ object Resolution {
     if (a.norm2 == 0 || b.norm2 == 0) 0.0
     else d / (math.sqrt(a.norm2) * math.sqrt(b.norm2))
   }
-
-  /** Sign-RP band signatures of an embeddings frame — the SAME hyperplanes
-    * and banding as [[candidatePairs]], exposed so incremental runs can
-    * PERSIST the blocking index (lsh_sigs table) and re-sign only changed
-    * entities.
-    */
-  def signatures(embeddings: DataFrame, p: Params): DataFrame = debugSigs(embeddings, p)
 
   /** Candidate pairs restricted to `affected` source entities, computed from
     * a PERSISTED signature index instead of re-signing the corpus — the

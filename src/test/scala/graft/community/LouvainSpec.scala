@@ -148,6 +148,23 @@ class LouvainSpec extends AnyFunSuite {
     }
   }
 
+  test("local-finish bounds at and beyond Int.MaxValue take the driver route") {
+    // the bound sizes an Int limit probe: bound + 1 must not overflow into a
+    // negative (or zero) limit for any Long bound
+    val (nodes, edges, m) = Louvain.initGraph(cliquesTriples)
+    val expected = Louvain.localMoving(nodes, edges, m).as[(String, String)].collect().sorted.toSeq
+    for (bound <- Seq(Int.MaxValue - 1L, Int.MaxValue.toLong, Long.MaxValue)) {
+      val got = Louvain.localMoving(nodes, edges, m, localFinishEdges = bound)
+        .as[(String, String)].collect().sorted.toSeq
+      assert(got == expected, s"localMoving diverged at bound $bound")
+    }
+    val runDefault = Louvain.run(cliquesTriples)
+    val runMax = Louvain.run(cliquesTriples, localFinishEdges = Long.MaxValue)
+    assert(runMax.modularities == runDefault.modularities)
+    assert(runMax.levels.map(_.membership.as[(String, String)].collect().sorted.toSeq) ==
+      runDefault.levels.map(_.membership.as[(String, String)].collect().sorted.toSeq))
+  }
+
   test("unattached communities are carried forward to higher levels") {
     // bridged cliques A,B (cross-community LINKS_TO at level 2) + a fully
     // separate clique C with NO external edge: C's level-1 community has no

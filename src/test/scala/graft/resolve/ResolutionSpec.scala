@@ -72,12 +72,23 @@ class ResolutionSpec extends AnyFunSuite {
     assert(out("zz") == "zz", "unpaired entity self-resolves")
   }
 
+  test("a probe vector shorter than p.dim fails loudly") {
+    // the broadcast scoring map hoists each vector's norm, which is only
+    // valid when every embedding has length p.dim
+    val emb = embFrame("a1" -> s"$base alpha", "a2" -> s"$base beta")
+      .union(Seq(("short", Array.fill(8)(1f))).toDF("entity_id", "embedding"))
+    val e = intercept[IllegalArgumentException](
+      Resolution.candidatePairs(emb, Resolution.Params()))
+    assert(e.getMessage.contains("length 8") && e.getMessage.contains("p.dim = 1536"),
+      e.getMessage)
+  }
+
   test("signatures are stable across partitionings (sparse signing)") {
     val emb = embFrame((0 until 40).map(i => s"e$i" -> s"$base token$i"): _*)
     val p = Resolution.Params()
-    val a = Resolution.debugSigs(emb, p)
+    val a = Resolution.signatures(emb, p)
       .as[(String, Int, Int)].collect().toSet
-    val b = Resolution.debugSigs(emb.repartition(7), p)
+    val b = Resolution.signatures(emb.repartition(7), p)
       .as[(String, Int, Int)].collect().toSet
     assert(a == b)
     assert(a.size == 40 * p.bands)
