@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.corpus.CorpusSynth
+import graft.pipeline.Pipeline
 
 /** Per-round benchmark — one JSON line on stdout.
   *
@@ -20,7 +21,7 @@ import graft.corpus.CorpusSynth
   * best-of-2 runs of the SAME commit was unresolvable from the artifacts):
   *   - every sample's wall AND the host's /proc/stat steal-time delta are
   *     recorded, so host contention is measured per sample, not argued;
-  *   - a per-stage wall breakdown (plans.BenchProfile) is embedded;
+  *   - per-stage walls of a kg_full sample (the stage hook) are embedded;
   *   - every run is archived to BENCH/runs/<utc>-<git-sha>.json (last_run
   *     .json stays the latest copy) — run history survives across rounds.
   */
@@ -83,41 +84,33 @@ object Bench {
   final case class Sample(ordinal: Int, wall: Double, stealSec: Double,
       gcMs: Long, rssMb: Long)
 
-  /** Full KG construction; returns (resolvedTripleCount, sample). */
-  private def runKg(cores: Int, cfg: CorpusSynth.Config, ordinal: Int): (Long, Sample) = {
-    val spark = session(cores)
-    val s0 = stealTicks()
-    val g0 = gcMillis()
-    val t0 = System.nanoTime()
-    val n = SparkEntry.KgStages(spark, cfg).resolvedTriples.count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val steal = (stealTicks() - s0) / 100.0
-    val gc = gcMillis() - g0
-    spark.stop()
-    (n, Sample(ordinal, wall, steal, gc, rssMb()))
-  }
-
-  /** Full PIPELINE wall: the chain plus the Louvain community hierarchy —
-    * the stage the headline historically excluded (r4 VERDICT: 67% of true
-    * pipeline wall at 3M pages before the driver-side hierarchy finish).
-    * Communities = Louvain.run forced via membership counts, the same
-    * definition EnduranceBench attributes against. The chain-only series
-    * above stays for r1-r4 history continuity; this group is the honest
-    * user-facing number.
+  /** One KG sample on a fresh session: the pipeline's stage list in memory,
+    * through `resolved_triples` (the chain series, history continuity with
+    * r1-r4) or, with `full`, every table of the list — Louvain, summaries
+    * and community embeddings included (the honest user-facing `kg_full`
+    * number; r4 VERDICT: communities were 67% of true pipeline wall at 3M
+    * pages before the driver-side hierarchy finish). Returns
+    * (resolvedTripleCount, sample, per-stage walls from the stage hook).
     */
-  private def runKgFull(cores: Int, cfg: CorpusSynth.Config, ordinal: Int): (Long, Sample) = {
+  private def sampleKg(cores: Int, cfg: CorpusSynth.Config, ordinal: Int,
+      full: Boolean = false): (Long, Sample, Vector[(String, Double)]) = {
     val spark = session(cores)
+    val walls = Vector.newBuilder[(String, Double)]
     val s0 = stealTicks()
     val g0 = gcMillis()
     val t0 = System.nanoTime()
-    val st = SparkEntry.KgStages(spark, cfg)
-    val n = st.resolvedTriples.count()
-    st.louvain.levels.foreach(_.membership.count())
+    val kg = Pipeline.inMemory(spark, cfg, (name, build) => {
+      val ts = System.nanoTime()
+      build()
+      walls += name -> (System.nanoTime() - ts) / 1e9
+    })
+    if (full) kg.buildAll()
+    val n = kg.read("resolved_triples").count()
     val wall = (System.nanoTime() - t0) / 1e9
     val steal = (stealTicks() - s0) / 100.0
     val gc = gcMillis() - g0
     spark.stop()
-    (n, Sample(ordinal, wall, steal, gc, rssMb()))
+    (n, Sample(ordinal, wall, steal, gc, rssMb()), walls.result())
   }
 
   def main(args: Array[String]): Unit = {
@@ -140,19 +133,19 @@ object Bench {
     val cfg = CorpusSynth.Config(nPages = pages, nClusters = math.max(12, pages / 25))
 
     // warm JIT/classloading so the low-parallelism run isn't penalized
-    runKg(coresLow, cfg.copy(nPages = 200), ordinal = 0)
+    sampleKg(coresLow, cfg.copy(nPages = 200), ordinal = 0)
 
     // best-of-3 per level, interleaved (r4; r3 was best-of-2): the sandbox
     // VM shows multi-x steal-time swings (host contention), so few samples
     // per level can invert the scaling signal entirely. Per-sample steal,
     // GC ms, RSS and ordinal are recorded so a polluted sample is
     // attributable from the artifact, not argued.
-    val (nLow, low1) = runKg(coresLow, cfg, 1)
-    val (nHigh, high1) = runKg(coresHigh, cfg, 2)
-    val (_, low2) = runKg(coresLow, cfg, 3)
-    val (_, high2) = runKg(coresHigh, cfg, 4)
-    val (_, low3) = runKg(coresLow, cfg, 5)
-    val (_, high3) = runKg(coresHigh, cfg, 6)
+    val (nLow, low1, _) = sampleKg(coresLow, cfg, 1)
+    val (nHigh, high1, _) = sampleKg(coresHigh, cfg, 2)
+    val (_, low2, _) = sampleKg(coresLow, cfg, 3)
+    val (_, high2, _) = sampleKg(coresHigh, cfg, 4)
+    val (_, low3, _) = sampleKg(coresLow, cfg, 5)
+    val (_, high3, _) = sampleKg(coresHigh, cfg, 6)
     val lows = Seq(low1, low2, low3)
     val highs = Seq(high1, high2, high3)
     val wallLow = lows.map(_.wall).min
@@ -161,29 +154,23 @@ object Bench {
     val thrHigh = nHigh / wallHigh
     val eff = (thrHigh / thrLow) / (coresHigh.toDouble / coresLow)
 
-    // kg_full (r5): chain + communities, interleaved best-of-2 per level —
-    // the full-pipeline wall AND its own scaling efficiency alongside the
-    // chain-only history series
-    val (nFull, full1Low) = runKgFull(coresLow, cfg, 7)
-    val (_, full1High) = runKgFull(coresHigh, cfg, 8)
-    val (_, full2Low) = runKgFull(coresLow, cfg, 9)
-    val (_, full2High) = runKgFull(coresHigh, cfg, 10)
+    // kg_full (r5): every table of the stage list, interleaved best-of-2
+    // per level — the full-pipeline wall AND its own scaling efficiency
+    // alongside the chain-only history series
+    val (nFull, full1Low, _) = sampleKg(coresLow, cfg, 7, full = true)
+    val full1High = sampleKg(coresHigh, cfg, 8, full = true)
+    val (_, full2Low, _) = sampleKg(coresLow, cfg, 9, full = true)
+    val full2High = sampleKg(coresHigh, cfg, 10, full = true)
     val fullLows = Seq(full1Low, full2Low)
-    val fullHighs = Seq(full1High, full2High)
+    val fullHighs = Seq(full1High._2, full2High._2)
     val fullWallLow = fullLows.map(_.wall).min
     val fullWallHigh = fullHighs.map(_.wall).min
     val fullEff = ((nFull / fullWallHigh) / (nFull / fullWallLow)) /
       (coresHigh.toDouble / coresLow)
 
-    // per-stage walls: one instrumented run at full parallelism (extra
-    // checkpoints make the sum ≥ the headline wall — attribution only)
-    val profSpark = session(coresHigh)
-    val pt0 = System.nanoTime()
-    val ps0 = stealTicks()
-    val (_, stageWalls) = plans.BenchProfile.profile(profSpark, cfg)
-    val profWall = (System.nanoTime() - pt0) / 1e9
-    val profSteal = (stealTicks() - ps0) / 100.0
-    profSpark.stop()
+    // per-stage walls of the faster full-parallelism kg_full sample, from
+    // the stage hook (attribution: each stage's outputs are checkpointed)
+    val (_, profSample, stageWalls) = Seq(full1High, full2High).minBy(_._2.wall)
 
     // adversarial skew group (r4, VERDICT item 4): the same chain on a
     // web-Zipf corpus (cluster 0 hot in 20% of facts, one domain at 30%)
@@ -263,8 +250,8 @@ object Bench {
         s""""samples_low_detail":${details(lows)},""" +
         s""""samples_high_detail":${details(highs)},""" +
         s""""stage_walls_high_sec":$sw,""" +
-        s""""stage_profile_total_sec":${f(profWall)},""" +
-        s""""stage_profile_steal_sec":${f(profSteal)}}"""
+        s""""stage_profile_total_sec":${f(profSample.wall)},""" +
+        s""""stage_profile_steal_sec":${f(profSample.stealSec)}}"""
     val kgFull =
       s""""kg_full":{"pages":$pages,"resolved_triples":$nFull,""" +
         s""""wall_low_sec":${f(fullWallLow)},"wall_high_sec":${f(fullWallHigh)},""" +

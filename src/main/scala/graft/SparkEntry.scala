@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
 
 import graft.chunk.CharacterChunker
 import graft.corpus.CorpusSynth
-import graft.extract.RuleExtractor
 import graft.functions.Normalize
 import graft.model._
-import graft.operators.{Dedup, GraphAssembly, Lift, Similarity, TextStats, Winnow}
+import graft.operators.{Dedup, GraphAssembly, Similarity, TextStats, Winnow}
+import graft.pipeline.{InMemoryStages, Pipeline}
 import graft.resolve.Resolution
 import graft.retrieval.{Retrieval, RetrieverDriver}
 
@@ -135,69 +135,6 @@ object SparkEntry {
         .otherwise(lit("")))
   }
 
-  /** KG corpus size scales with the driver's sf tier so bench times are
-    * meaningful; generation is deterministic in (seed, nPages).
-    */
-  private def kgConfig(sfDir: String): CorpusSynth.Config = {
-    val pages =
-      if (sfDir.contains("0.001")) 150
-      else if (sfDir.contains("0.01")) 1500
-      else if (sfDir.contains("0.1")) 15000
-      else 200
-    CorpusSynth.Config(nPages = pages, nClusters = math.max(12, pages / 25))
-  }
-
-  /** In-memory KG stage graph (no table writes — Verify persists results).
-    * Built lazily per stage; `extracted` is the shared fan-out point.
-    */
-  final case class KgStages(spark: SparkSession, cfg: CorpusSynth.Config) {
-    import spark.implicits._
-    lazy val pages: Dataset[Page] = CorpusSynth.pages(spark, cfg)
-    lazy val docs: Dataset[Doc] = GraphAssembly.docs(pages)
-    lazy val chunks: Dataset[Chunk] =
-      GraphAssembly.chunks(docs, graft.chunk.Chunkers.forType("regex"))
-    lazy val extracted: Dataset[ExtractedGraphDoc] =
-      GraphAssembly.extractAll(chunks, new RuleExtractor).localCheckpoint(true)
-    // entities/resolvesTo fan out to several consumers — checkpoint so each
-    // is computed once (the pipeline driver gets this for free from its
-    // stage tables; the in-memory path must do it explicitly)
-    lazy val entities: Dataset[Entity] =
-      GraphAssembly.entities(extracted).localCheckpoint(true)
-    lazy val resolvesTo: Dataset[ResolvesTo] = {
-      // corpus-size-adaptive LSH blocking (r4): one cheap count on the
-      // checkpointed entity table keeps band buckets bounded at any scale —
-      // below the 65536-entity floor the params (and every pinned oracle)
-      // are bit-identical to the fixed defaults
-      val pEff = Resolution.scaledParams(Resolution.Params(), entities.count())
-      val emb = Resolution.embedEntities(entities, pEff)
-      val pairs = Resolution.candidatePairs(emb, pEff)
-      Resolution.resolvesTo(entities, pairs).localCheckpoint(true)
-    }
-    lazy val triples: Dataset[Triple] = GraphAssembly.triples(extracted)
-    lazy val resolvedTriples: Dataset[ResolvedTriple] =
-      Lift.resolvedTriples(triples, resolvesTo)
-    lazy val louvain: graft.community.Louvain.Result =
-      graft.community.Louvain.run(resolvedTriples.toDF(),
-        allEntities = Some(resolvesTo.toDF().select(col("canonical_id")).distinct()))
-    /** Chunk embeddings — the reference embeds every DocumentChunk
-      * (`ecc/app/graphrag/workers.py:115-117`); these feed Q2/Q3 vector
-      * retrieval.
-      */
-    lazy val chunkEmbeddings: org.apache.spark.sql.DataFrame =
-      graft.extract.Embeddings.embedText(chunks.toDF(), "chunk_id", "text")
-        .localCheckpoint(true)
-    /** Community-summary descriptions + their embeddings
-      * (`workers.py:530-560`); feed Q4 vector seeding.
-      */
-    lazy val communityDescriptions: org.apache.spark.sql.DataFrame =
-      graft.community.Summarize.describeAll(
-        louvain.levels, entities.toDF().localCheckpoint(true),
-        resolvesTo.toDF().localCheckpoint(true)).localCheckpoint(true)
-    lazy val communityEmbeddings: org.apache.spark.sql.DataFrame =
-      graft.extract.Embeddings.embedText(
-        communityDescriptions, "community_id", "description").localCheckpoint(true)
-  }
-
   /** Memoized stage graphs: ~20 kg_* queries share one corpus pipeline, so
     * without this Verify rebuilt (and localCheckpoint-pinned) the full stage
     * graph once PER QUERY — ~20x the work and an unbounded block-manager
@@ -206,32 +143,66 @@ object SparkEntry {
     * session so Bench's fresh-session runs never share state.
     */
   private val kgCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, CorpusSynth.Config), KgStages]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, CorpusSynth.Config), InMemoryStages]
 
-  def kgStages(s: SparkSession, cfg: CorpusSynth.Config): KgStages =
-    kgCache.getOrElseUpdate((s, cfg), KgStages(s, cfg))
-
-  private def kg(s: SparkSession, dir: String): KgStages = kgStages(s, kgConfig(dir))
+  /** The pipeline's full-build stage list over `cfg`, held in memory (no
+    * table writes — Verify persists results).
+    */
+  def kgStages(s: SparkSession, cfg: CorpusSynth.Config): InMemoryStages =
+    kgCache.getOrElseUpdate((s, cfg), Pipeline.inMemory(s, cfg))
 
   /** The PINNED corpus every digest-gated kg_* query runs over (r4: the 20
     * formerly rows-only kg_* queries now emit a one-row content digest over
     * this corpus, so their oracle constants hold wherever Verify runs —
     * same pattern as kg_gate / kg_content_gate). 1500 pages = the sf0.01
-    * tier the driver verifies at, so at sf0.01 this is the SAME memoized
-    * stage graph as kg(s, d) — zero extra work.
+    * tier the driver verifies at.
     */
-  private def pinnedKg(s: SparkSession): KgStages =
+  private def pinnedKg(s: SparkSession): InMemoryStages =
     kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
 
   /** Simple directed graph view of the resolved KG (distinct (subj, obj),
     * self-loops dropped) — the edge table the canned graph statistics
     * (kg_graph_stats / kg_pagerank_top / kg_bfs_hops) run over.
     */
-  private def kgSimpleEdges(st: KgStages): DataFrame =
-    st.resolvedTriples.toDF()
+  private def kgSimpleEdges(st: InMemoryStages): DataFrame =
+    st.read("resolved_triples")
       .select(col("subj").as("src"), col("obj").as("dst"))
       .where(col("src") =!= col("dst"))
       .dropDuplicates("src", "dst")
+
+  /** (community_id, iteration, description) of every community
+    * `Summarize.describeAll` described, read back from the communities table.
+    */
+  private def kgCommunityDescriptions(st: InMemoryStages): DataFrame =
+    st.read("communities").where(col("description").isNotNull)
+      .select("community_id", "iteration", "description")
+
+  /** Louvain level `level`'s (child_id, community_id) membership: in_community
+    * at level 1, above it the has_parent rows whose child is a community of
+    * the level below.
+    */
+  private def kgMembership(st: InMemoryStages, level: Int): DataFrame =
+    if (level == 1) st.read("in_community").toDF("child_id", "community_id")
+    else st.read("has_parent")
+      .join(st.read("communities").where(col("iteration") === level - 1), "community_id")
+      .select(col("community_id").as("child_id"), col("parent_id").as("community_id"))
+
+  /** Every community with its description, "" where none — the retrievers'
+    * community table.
+    */
+  private def kgCommunities(st: InMemoryStages): DataFrame =
+    st.read("communities").na.fill("", Seq("description"))
+
+  /** The typed GSQL edge set the hybrid retrievers traverse. */
+  private def kgTypedEdges(st: InMemoryStages): DataFrame =
+    Retrieval.typedEdges(st.read("triples"), st.read("mentions"), st.read("chunks"))
+      .localCheckpoint(true)
+
+  /** Entity-vertex seeds of the hybrid retrievers: the first two subjects. */
+  private def kgTripleSeeds(st: InMemoryStages): Seq[String] =
+    st.read("triples").orderBy(col("subj")).limit(2)
+      .select(col("subj")).collect().map(r => Retrieval.EntityPrefix + r.getString(0))
+      .toSeq.distinct
 
   /** One (table_name, n_rows, cols, digest) row pinning a stage table's full
     * content: order-independent sum of per-row xxhash64 over every
@@ -354,17 +325,12 @@ object SparkEntry {
       (sum(col("hits")).cast("double") / (count(lit(1)) * 10) >= 0.8).as("recall_ok"))
   }
 
-  /** Debug-only alias of the gate corpus generator (plans.DebugPq). */
-  def debugClusteredVecs(s: SparkSession, nClusters: Int, perCluster: Int,
-      dim: Int, seed: Long): DataFrame =
-    clusteredVecs(s, nClusters, perCluster, dim, seed)
-
   /** Flagship: full KG construction (chunk → extract → resolve → lift) on a
     * small deterministic corpus; returns the canonical triple table.
     */
   def entry(spark: SparkSession): DataFrame =
-    KgStages(spark, CorpusSynth.Config(nPages = 120, nClusters = 16))
-      .resolvedTriples.toDF()
+    Pipeline.inMemory(spark, CorpusSynth.Config(nPages = 120, nClusters = 16))
+      .read("resolved_triples")
 
   // ------------------------------------------------------------- queries
 
@@ -926,9 +892,9 @@ object SparkEntry {
     // single-line so the gate runs where the operator has work to do;
     // summary row pinned as a constant oracle
     "kg_line_dedup" -> ((s, d) => {
-      val st = kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
+      val st = pinnedKg(s)
       operators.Curation.dedupLines(
-          st.pages.toDF().select(lower(col("url")).as("doc_id"), col("text")))
+          st.read("pages").select(lower(col("url")).as("doc_id"), col("text")))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_lines")).as("total_lines"),
           sum(col("n_lines_kept")).as("total_kept"),
@@ -1345,33 +1311,30 @@ object SparkEntry {
       // digest also pins the north rule's per-row invariant: extract(html)
       // is byte-identical to the stored text for EVERY url (any false flips
       // the hash)
-      contentDigest("kg_pages", pinnedKg(s).pages
+      contentDigest("kg_pages", pinnedKg(s).read("pages").as[Page]
         .map(p => (p.url, p.lang, graft.functions.HtmlText.extract(p.html) == p.text))
         .toDF("url", "lang", "text_byte_identical"))
     }),
 
-    "kg_chunks" -> ((s, d) => contentDigest("kg_chunks", pinnedKg(s).chunks.toDF())),
+    "kg_chunks" -> ((s, d) => contentDigest("kg_chunks", pinnedKg(s).read("chunks"))),
 
     "kg_triples_raw" -> ((s, d) =>
-      contentDigest("kg_triples_raw", pinnedKg(s).triples.toDF())),
+      contentDigest("kg_triples_raw", pinnedKg(s).read("triples"))),
 
     "kg_entities" -> ((s, d) =>
-      contentDigest("kg_entities", pinnedKg(s).entities.toDF())),
+      contentDigest("kg_entities", pinnedKg(s).read("entities"))),
 
     "kg_mentions" -> ((s, d) =>
-      contentDigest("kg_mentions", GraphAssembly.mentions(pinnedKg(s).extracted).toDF())),
+      contentDigest("kg_mentions", pinnedKg(s).read("mentions"))),
 
     "kg_resolves_to" -> ((s, d) =>
-      contentDigest("kg_resolves_to", pinnedKg(s).resolvesTo.toDF())),
+      contentDigest("kg_resolves_to", pinnedKg(s).read("resolves_to"))),
 
     "kg_resolved_triples" -> ((s, d) =>
-      contentDigest("kg_resolved_triples", pinnedKg(s).resolvedTriples.toDF())),
+      contentDigest("kg_resolved_triples", pinnedKg(s).read("resolved_triples"))),
 
-    "kg_type_relationships" -> ((s, d) => {
-      val st = pinnedKg(s)
-      contentDigest("kg_type_relationships",
-        Lift.typeRelationships(st.triples, GraphAssembly.entityTypes(st.extracted)).toDF())
-    }),
+    "kg_type_relationships" -> ((s, d) =>
+      contentDigest("kg_type_relationships", pinnedKg(s).read("type_relationships"))),
 
     // one-row digest of every KG stage's cardinality over the PINNED
     // sf0.01-tier corpus (1500 pages — independent of sfDir, so the constant
@@ -1381,12 +1344,13 @@ object SparkEntry {
     // correctness output — a late-run casualty, not a query failure).
     "kg_gate" -> ((s, d) => {
       import s.implicits._
-      val st = kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
-      val louv = st.louvain
-      Seq((st.chunks.count(), st.entities.count(),
-          operators.GraphAssembly.mentions(st.extracted).count(),
-          st.triples.count(), st.resolvesTo.count(), st.resolvedTriples.count(),
-          louv.levels.head.communities.count(), louv.levels.size.toLong))
+      val st = pinnedKg(s)
+      val Seq(chunks, entities, mentions, triples, resolves, resolved) =
+        Seq("chunks", "entities", "mentions", "triples", "resolves_to", "resolved_triples")
+          .map(st.read(_).count())
+      Seq((chunks, entities, mentions, triples, resolves, resolved,
+          st.read("communities").where(col("iteration") === 1).count(),
+          st.read("modularity").count()))
         .toDF("n_chunks", "n_entities", "n_mentions", "n_triples_raw",
           "n_resolves_to", "n_resolved_triples", "n_l1_communities", "n_levels")
     }),
@@ -1398,20 +1362,14 @@ object SparkEntry {
     // assembly → ER → lift → communities flips a digest even when row
     // counts are unchanged. Constant oracle row per table.
     "kg_content_gate" -> ((s, d) => {
-      val st = kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
-      val louv = st.louvain
-      val tables: Seq[(String, DataFrame)] = Seq(
-        "pages" -> st.pages.toDF(),
-        "chunks" -> st.chunks.toDF(),
-        "triples_raw" -> st.triples.toDF(),
-        "mentions" -> operators.GraphAssembly.mentions(st.extracted).toDF(),
-        "entities" -> st.entities.toDF(),
-        "resolves_to" -> st.resolvesTo.toDF(),
-        "resolved_triples" -> st.resolvedTriples.toDF(),
-        "type_relationships" -> Lift.typeRelationships(
-          st.triples, GraphAssembly.entityTypes(st.extracted)).toDF(),
-        "community_descriptions" -> st.communityDescriptions) ++
-        louv.levels.map(l => s"louvain_l${l.iteration}_membership" -> l.membership)
+      val st = pinnedKg(s)
+      val tables: Seq[(String, DataFrame)] =
+        Seq("pages", "chunks", "mentions", "entities", "resolves_to", "resolved_triples",
+            "type_relationships").map(t => t -> st.read(t)) ++
+          Seq("triples_raw" -> st.read("triples"),
+            "community_descriptions" -> kgCommunityDescriptions(st)) ++
+          (1 to st.read("modularity").count().toInt)
+            .map(i => s"louvain_l${i}_membership" -> kgMembership(st, i))
       tables.map { case (n, df) => contentDigest(n, df) }
         .reduce(_ unionAll _).orderBy(col("table_name"))
     }),
@@ -1422,13 +1380,13 @@ object SparkEntry {
     // shape summary of the simple resolved graph (constant oracle: the
     // pinned corpus makes every number deterministic)
     "kg_graph_stats" -> ((s, d) => {
-      val st = kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
+      val st = pinnedKg(s)
       operators.GraphAlgos.degreeStats(kgSimpleEdges(st))
     }),
 
     // top-10 hubs by decimal PageRank on the resolved graph, pinned to 9 dp
     "kg_pagerank_top" -> ((s, d) => {
-      val st = kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
+      val st = pinnedKg(s)
       operators.GraphAlgos.pageRank(kgSimpleEdges(st), iterations = 10)
         .select(col("id"), round(col("rank").cast("double"), 9).as("pr"))
         .orderBy(col("pr").desc, col("id")).limit(10)
@@ -1439,7 +1397,7 @@ object SparkEntry {
     // bit-deterministic, so the rounded top-10 is a pinned constant; the
     // seed itself is excluded (its teleport mass dwarfs the neighborhood)
     "kg_ppr_top" -> ((s, d) => {
-      val st = kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
+      val st = pinnedKg(s)
       val e = kgSimpleEdges(st).localCheckpoint(true)
       val seed = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .orderBy(col("deg").desc, col("src")).limit(1)
@@ -1455,7 +1413,7 @@ object SparkEntry {
     // registers): 61 nodes < k=64 so every ball count is EXACT — the pinned
     // rows are true reachable-pair counts per hop up to convergence
     "kg_neighborhood" -> ((s, d) => {
-      val st = kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
+      val st = pinnedKg(s)
       operators.GraphAlgos.neighborhoodFunction(kgSimpleEdges(st), maxHops = 8, k = 64)
         .select(col("t"), col("n_pairs").cast("long").as("n_pairs"))
     }),
@@ -1464,7 +1422,7 @@ object SparkEntry {
     // regime as kg_neighborhood, so the inverse-distance sums are exact
     // rationals and the rounded ranking is a pinned constant)
     "kg_harmonic_top" -> ((s, d) => {
-      val st = kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
+      val st = pinnedKg(s)
       operators.GraphAlgos.harmonicCentrality(kgSimpleEdges(st), maxHops = 8, k = 64)
         .select(col("id"), round(col("hc"), 6).as("hc"))
         .orderBy(col("hc").desc, col("id")).limit(10)
@@ -1476,7 +1434,7 @@ object SparkEntry {
     // only starts shedding above its degeneracy shoulder); exact peel
     // fixpoints on the pinned corpus
     "kg_kcore" -> ((s, d) => {
-      val st = kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
+      val st = pinnedKg(s)
       val e = kgSimpleEdges(st).localCheckpoint(true)
       Seq(2, 16, 18, 20, 22).map { k =>
         operators.GraphAlgos.kCore(e, k)
@@ -1512,7 +1470,7 @@ object SparkEntry {
     // BFS reachability histogram from the max-out-degree hub (ties by id)
     "kg_bfs_hops" -> ((s, d) => {
       import s.implicits._
-      val st = kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
+      val st = pinnedKg(s)
       val e = kgSimpleEdges(st).localCheckpoint(true)
       val seed = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .orderBy(col("deg").desc, col("src")).limit(1)
@@ -1540,11 +1498,11 @@ object SparkEntry {
     }),
 
     "kg_keyword_search" -> ((s, d) => contentDigest("kg_keyword_search",
-      Retrieval.keywordSearch(pinnedKg(s).chunks.toDF(),
+      Retrieval.keywordSearch(pinnedKg(s).read("chunks"),
         Seq("corporation", "works at", "moved to"), "ANY", topK = 25))),
 
     "kg_sibling_search" -> ((s, d) => {
-      val chunks = pinnedKg(s).chunks.toDF().localCheckpoint(true)
+      val chunks = pinnedKg(s).read("chunks")
       val seeds = chunks.orderBy(col("chunk_id")).limit(5)
         .select(col("chunk_id")).collect().map(_.getString(0)).toSeq
       contentDigest("kg_sibling_search", Retrieval.siblingSearch(chunks, seeds, 2, 2))
@@ -1555,36 +1513,23 @@ object SparkEntry {
       // both ways, IS_AFTER, IS_HEAD_OF, HAS_TAIL) with visited/ancestor
       // guards and per-seed attribution
       val st = pinnedKg(s)
-      val mentions = GraphAssembly.mentions(st.extracted).toDF()
-      val edges = Retrieval.typedEdges(st.triples.toDF(), mentions, st.chunks.toDF())
-        .localCheckpoint(true)
-      val seeds = st.triples.toDF().orderBy(col("subj")).limit(2)
-        .select(col("subj")).collect().map(r => Retrieval.EntityPrefix + r.getString(0))
-        .toSeq.distinct
       contentDigest("kg_hybrid_expand",
-        Retrieval.hybridExpandTyped(edges, seeds, numHops = 2, numSeenMin = 1))
+        Retrieval.hybridExpandTyped(kgTypedEdges(st), kgTripleSeeds(st), numHops = 2, numSeenMin = 1))
     }),
 
     "kg_hybrid_context" -> ((s, d) => {
       // the GSQL result_set: per-seed context strings per reached vertex
       val st = pinnedKg(s)
-      val mentions = GraphAssembly.mentions(st.extracted).toDF()
-      val chunks = st.chunks.toDF().localCheckpoint(true)
-      val edges = Retrieval.typedEdges(st.triples.toDF(), mentions, chunks)
-        .localCheckpoint(true)
-      val seeds = st.triples.toDF().orderBy(col("subj")).limit(2)
-        .select(col("subj")).collect().map(r => Retrieval.EntityPrefix + r.getString(0))
-        .toSeq.distinct
-      val expanded = Retrieval.hybridExpandTyped(edges, seeds, numHops = 2, numSeenMin = 1)
+      val expanded = Retrieval.hybridExpandTyped(kgTypedEdges(st), kgTripleSeeds(st),
+        numHops = 2, numSeenMin = 1)
       contentDigest("kg_hybrid_context",
-        Retrieval.hybridContext(expanded, st.entities.toDF(), chunks))
+        Retrieval.hybridContext(expanded, st.read("entities"), st.read("chunks")))
     }),
 
     "kg_entity_retrieval" -> ((s, d) => {
       val st = pinnedKg(s)
-      val mentions = GraphAssembly.mentions(st.extracted).toDF()
       contentDigest("kg_entity_retrieval", Retrieval.entityRelationshipRetrieval(
-        st.entities.toDF(), mentions, st.chunks.toDF(), st.triples.toDF(),
+        st.read("entities"), st.read("mentions"), st.read("chunks"), st.read("triples"),
         Seq("%corporation%"), Seq("%works_at%"), topK = 10))
     }),
 
@@ -1593,70 +1538,52 @@ object SparkEntry {
 
     "kg_content_vector_search" -> ((s, d) => {
       val st = pinnedKg(s)
-      val withEmb = st.chunkEmbeddings
-        .join(st.chunks.toDF().select(col("chunk_id"), col("text").as("content")), "chunk_id")
+      val withEmb = st.read("chunk_embeddings")
+        .join(st.read("chunks").select(col("chunk_id"), col("text").as("content")), "chunk_id")
         .withColumnRenamed("chunk_id", "id")
       contentDigest("kg_content_vector_search",
         Retrieval.contentSimilaritySearch(withEmb, kgProbeVec(s), topK = 15))
     }),
 
     "kg_content_fetch" -> ((s, d) => {
+      import s.implicits._
       // Q2's NON-vector form (`Content_Similarity_Search.gsql:29-47`): seeds
       // arrive as explicit (id, type) pairs, no embedding involved; each
       // fetches its content by type
       val st = pinnedKg(s)
-      val chunks = st.chunks.toDF().localCheckpoint(true)
-      val chunkSeeds = chunks.orderBy(col("chunk_id")).limit(3)
-        .select(col("chunk_id")).collect().map(r => (r.getString(0), "DocumentChunk"))
-      val entitySeeds = st.entities.toDF().orderBy(col("entity_id")).limit(2)
-        .select(col("entity_id")).collect().map(r => (r.getString(0), "Entity"))
-      val docSeeds = st.docs.toDF().orderBy(col("doc_id")).limit(1)
-        .select(col("doc_id")).collect().map(r => (r.getString(0), "Document"))
-      val commSeeds = st.louvain.levels.head.communities
-        .orderBy(col("community_id")).limit(1)
-        .select(col("community_id")).collect().map(r => (r.getString(0), "Community"))
-      val comms = st.louvain.levels.map(_.communities).reduce(_ unionByName _)
-        .join(st.communityDescriptions, Seq("community_id", "iteration"), "left")
-        .na.fill("", Seq("description"))
+      val chunks = st.read("chunks")
+      val docs = GraphAssembly.docs(st.read("pages").as[Page]).toDF()
+      def firstIds(df: DataFrame, idCol: String, n: Int, kind: String) =
+        df.orderBy(col(idCol)).limit(n).select(col(idCol)).collect()
+          .map(r => (r.getString(0), kind)).toSeq
       contentDigest("kg_content_fetch", Retrieval.contentFetch(
-        (chunkSeeds ++ entitySeeds ++ docSeeds ++ commSeeds).toSeq,
-        chunks, st.docs.toDF(), st.entities.toDF(), comms))
+        firstIds(chunks, "chunk_id", 3, "DocumentChunk") ++
+          firstIds(st.read("entities"), "entity_id", 2, "Entity") ++
+          firstIds(docs, "doc_id", 1, "Document") ++
+          firstIds(st.read("communities").where(col("iteration") === 1),
+            "community_id", 1, "Community"),
+        chunks, docs, st.read("entities"), kgCommunities(st)))
     }),
 
     "kg_sibling_vector_search" -> ((s, d) => {
       val st = pinnedKg(s)
       contentDigest("kg_sibling_vector_search", Retrieval.siblingVectorSearch(
-        st.chunks.toDF().localCheckpoint(true), st.chunkEmbeddings, kgProbeVec(s),
+        st.read("chunks"), st.read("chunk_embeddings"), kgProbeVec(s),
         topKSeeds = 5, lookback = 1, lookahead = 2))
     }),
 
     "kg_community_vector_search" -> ((s, d) => {
       val st = pinnedKg(s)
-      val louv = st.louvain
-      val comms = louv.levels.map(_.communities).reduce(_ unionByName _)
-        .join(st.communityDescriptions, Seq("community_id", "iteration"), "left")
-        .na.fill("", Seq("description"))
-      val hasParent = if (louv.levels.size > 1)
-        louv.levels.tail.map(_.membership).reduce(_ unionByName _)
-          .toDF("community_id", "parent_id")
-      else comms.select(col("community_id"), col("community_id").as("parent_id")).limit(0)
-      val inComm = louv.levels.head.membership.toDF("canonical_id", "community_id")
-        .localCheckpoint(true)
-      val mentions = GraphAssembly.mentions(st.extracted).toDF()
       contentDigest("kg_community_vector_search",
-        Retrieval.communityVectorSearch(comms, st.communityEmbeddings, hasParent,
-          inComm, st.resolvesTo.toDF().localCheckpoint(true), mentions,
-          st.chunks.toDF(), kgProbeVec(s), topKSeeds = 2))
+        Retrieval.communityVectorSearch(kgCommunities(st), st.read("community_embeddings"),
+          st.read("has_parent"), st.read("in_community"), st.read("resolves_to"),
+          st.read("mentions"), st.read("chunks"), kgProbeVec(s), topKSeeds = 2))
     }),
 
     "kg_hybrid_vector_search" -> ((s, d) => {
       val st = pinnedKg(s)
-      val mentions = GraphAssembly.mentions(st.extracted).toDF()
-      val edges = Retrieval.typedEdges(st.triples.toDF(), mentions, st.chunks.toDF())
-        .localCheckpoint(true)
-      val entityEmb = Resolution.embedEntities(st.entities, Resolution.Params())
       contentDigest("kg_hybrid_vector_search",
-        Retrieval.hybridVectorSearch(edges, entityEmb, kgProbeVec(s),
+        Retrieval.hybridVectorSearch(kgTypedEdges(st), st.read("embeddings"), kgProbeVec(s),
           topKSeeds = 3, numHops = 2, numSeenMin = 1))
     }),
 
@@ -1690,45 +1617,31 @@ object SparkEntry {
       val embed: String => Array[Float] =
         new graft.extract.HashEmbedder(1536, 42).embed
       val q = "works at corporation technology"
-      val withEmb = st.chunkEmbeddings
-        .join(st.chunks.toDF().select($"chunk_id", $"text"), "chunk_id")
+      val withEmb = st.read("chunk_embeddings")
+        .join(st.read("chunks").select($"chunk_id", $"text"), "chunk_id")
         .select($"chunk_id".as("id"), $"embedding", $"text".as("content"))
         .localCheckpoint(true)
-      val docs = st.docs.toDF()
-      val entities = st.entities.toDF()
-      val communities = st.communityDescriptions
+      val chunks = st.read("chunks")
+      val docs = GraphAssembly.docs(st.read("pages").as[Page]).toDF()
+      val entities = st.read("entities")
+      val mentions = st.read("mentions")
       def sim(hyde: Boolean, expand: Boolean) =
-        RetrieverDriver.similarityRetrieveAnswer(q, withEmb, st.chunks.toDF(), docs,
-          entities, communities, DriverLlm, embed, topK = 3,
+        RetrieverDriver.similarityRetrieveAnswer(q, withEmb, chunks, docs,
+          entities, kgCommunityDescriptions(st), DriverLlm, embed, topK = 3,
           withHyDE = hyde, expand = expand, similarityThreshold = 0.5)
-      val mentions = GraphAssembly.mentions(st.extracted).toDF()
-      val edges = Retrieval.typedEdges(st.triples.toDF(), mentions, st.chunks.toDF())
-        .localCheckpoint(true)
-      val entityEmb = Resolution.embedEntities(st.entities, Resolution.Params())
-        .localCheckpoint(true)
+      val edges = kgTypedEdges(st)
       def hyb(expand: Boolean, method: String) =
-        RetrieverDriver.hybridRetrieveAnswer(q, edges, entityEmb, st.chunks.toDF(),
+        RetrieverDriver.hybridRetrieveAnswer(q, edges, st.read("embeddings"), chunks,
           entities, DriverLlm, embed, topK = 2, numHops = 2,
           expand = expand, method = method)
-      val louv = st.louvain
-      val comms = louv.levels.map(_.communities).reduce(_ unionByName _)
-        .join(st.communityDescriptions, Seq("community_id", "iteration"), "left")
-        .na.fill("", Seq("description"))
-      val hasParent = if (louv.levels.size > 1)
-        louv.levels.tail.map(_.membership).reduce(_ unionByName _)
-          .toDF("community_id", "parent_id")
-      else comms.select($"community_id", $"community_id".as("parent_id")).limit(0)
-      val inComm = louv.levels.head.membership.toDF("canonical_id", "community_id")
-        .localCheckpoint(true)
-      val community = RetrieverDriver.communityRetrieveAnswer(q, comms,
-        st.communityEmbeddings, hasParent, inComm,
-        st.resolvesTo.toDF().localCheckpoint(true), mentions, st.chunks.toDF(),
+      val community = RetrieverDriver.communityRetrieveAnswer(q, kgCommunities(st),
+        st.read("community_embeddings"), st.read("has_parent"), st.read("in_community"),
+        st.read("resolves_to"), mentions, chunks,
         DriverLlm, embed, communityLevel = 1, topK = 2)
-      val sibling = RetrieverDriver.siblingRetrieveAnswer(q, st.chunks.toDF(),
-        st.chunkEmbeddings, DriverLlm, embed, topK = 2)
+      val sibling = RetrieverDriver.siblingRetrieveAnswer(q, chunks,
+        st.read("chunk_embeddings"), DriverLlm, embed, topK = 2)
       val entRel = RetrieverDriver.entityRelationshipRetrieveAnswer(q,
-        st.entities.toDF(), mentions, st.chunks.toDF(), st.triples.toDF(),
-        DriverLlm, topK = 5)
+        entities, mentions, chunks, st.read("triples"), DriverLlm, topK = 5)
       val rows = Seq(
         ("similarity", "plain", sim(hyde = false, expand = false)),
         ("similarity", "hyde", sim(hyde = true, expand = false)),
@@ -1747,30 +1660,17 @@ object SparkEntry {
 
     "kg_community_search" -> ((s, d) => {
       val st = pinnedKg(s)
-      val louv = st.louvain
-      val comms = louv.levels.map(_.communities).reduce(_ unionByName _)
-        .withColumn("description", lit(""))
-      val hasParent = if (louv.levels.size > 1)
-        louv.levels.tail.map(_.membership).reduce(_ unionByName _)
-          .toDF("community_id", "parent_id")
-      else comms.select(col("community_id"), col("community_id").as("parent_id")).limit(0)
-      val inComm = louv.levels.head.membership.toDF("canonical_id", "community_id")
-        .localCheckpoint(true)
-      val mentions = GraphAssembly.mentions(st.extracted).toDF()
+      val inComm = st.read("in_community")
       val seeds = inComm.groupBy(col("community_id")).count()
         .orderBy(col("count").desc, col("community_id")).limit(2)
         .select(col("community_id")).collect().map(_.getString(0)).toSeq
-      contentDigest("kg_community_search", Retrieval.communitySearch(comms, hasParent,
-        inComm, st.resolvesTo.toDF().localCheckpoint(true), mentions, st.chunks.toDF(),
-        seeds))
+      contentDigest("kg_community_search", Retrieval.communitySearch(
+        st.read("communities").withColumn("description", lit("")), st.read("has_parent"),
+        inComm, st.read("resolves_to"), st.read("mentions"), st.read("chunks"), seeds))
     }),
 
-    "kg_communities" -> ((s, d) => {
-      val st = pinnedKg(s)
-      contentDigest("kg_communities",
-        st.louvain.levels.map(_.communities).reduce(_ unionByName _)
-          .join(st.communityDescriptions, Seq("community_id", "iteration"), "left"))
-    }),
+    "kg_communities" -> ((s, d) =>
+      contentDigest("kg_communities", pinnedKg(s).read("communities"))),
 
     // Q8 concept curation end-to-end (r4: leaf builders + Build_Concept_Tree
     // + co-occurrence): reify the raw triples, seed per-relation-type
@@ -1779,8 +1679,8 @@ object SparkEntry {
     // Digest pins concepts, tree edges, co-occurrence counts and the full
     // cover table in one hash.
     "kg_concepts" -> ((s, d) => {
-      val st = pinnedKg(s)
-      val (rels, heads, tails) = operators.Concepts.reify(st.triples)
+      import s.implicits._
+      val (rels, heads, tails) = operators.Concepts.reify(pinnedKg(s).read("triples").as[Triple])
       val seed = operators.Concepts.conceptsPerRelationType(rels).localCheckpoint(true)
       val relConcepts = seed.select(col("concept_id")).distinct()
         .withColumn("concept_type", lit("RELATIONSHIP_LEAF"))
@@ -1814,9 +1714,8 @@ object SparkEntry {
       // so the constant oracle row holds wherever Verify runs; Q itself is
       // bit-deterministic (exact integer-sum algebra, Louvain.modularity),
       // rounded to 4dp for the oracle literal
-      kgStages(s, CorpusSynth.Config(nPages = 1500, nClusters = 60))
-        .louvain.modularities.zipWithIndex
-        .map { case (q, i) => ((i + 1).toLong, math.rint(q * 1e4) / 1e4) }
+      pinnedKg(s).read("modularity").as[(Int, Double)].collect().sortBy(_._1)
+        .map { case (i, q) => (i.toLong, math.rint(q * 1e4) / 1e4) }.toSeq
         .toDF("iteration", "modularity")
     }),
 
@@ -1834,7 +1733,7 @@ object SparkEntry {
     import s.implicits._
     val st = kgStages(s, cfg)
 
-    val emitted = st.resolvedTriples
+    val emitted = st.read("resolved_triples")
       .where(col("pred") =!= GraphAssembly.CoOccurrencePred)
       .select(col("subj"), col("pred"), col("obj")).distinct()
     val golden = CorpusSynth.goldenTriples(s, cfg)
@@ -1844,14 +1743,15 @@ object SparkEntry {
     val nEmit = emitted.count().toDouble
     val nGold = golden.count().toDouble
 
-    val links = st.resolvesTo
-      .as("a").join(st.resolvesTo.as("b"), col("a.canonical_id") === col("b.canonical_id"))
+    val res = st.read("resolves_to")
+    val links = res
+      .as("a").join(res.as("b"), col("a.canonical_id") === col("b.canonical_id"))
       .where(col("a.entity_id") < col("b.entity_id"))
       .select(col("a.entity_id").as("entity_id_a"), col("b.entity_id").as("entity_id_b"))
       .distinct()
     val goldLinks = CorpusSynth.goldenLinks(s, cfg).toDF().distinct()
     // restrict golden links to aliases that actually occur in the corpus
-    val present = st.entities.select(col("entity_id")).distinct()
+    val present = st.read("entities").select(col("entity_id")).distinct()
     val goldPresent = goldLinks
       .join(present.withColumnRenamed("entity_id", "entity_id_a"), "entity_id_a")
       .join(present.withColumnRenamed("entity_id", "entity_id_b"), "entity_id_b")

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import java.security.MessageDigest
 import java.sql.Timestamp
 import java.util.UUID
 
@@ -25,11 +26,11 @@ import graft.model.{FileMetricsRow, LineageRow}
   * enough to swap for `writeTo(...).createOrReplace` / MERGE INTO when a real
   * Iceberg runtime is present).
   */
-final class Catalog(val root: String, val spark: SparkSession) {
+final class Catalog(val root: String, val spark: SparkSession) extends Tables {
 
   def path(table: String): String = s"$root/$table"
 
-  def write(table: String, df: DataFrame, partitions: Option[Int] = None): Unit = {
+  def write(table: String, df: DataFrame, partitions: Option[Int]): Unit = {
     val out = partitions.map(n => df.repartition(n)).getOrElse(df)
     out.write.mode(SaveMode.Overwrite).parquet(path(table))
   }
@@ -41,8 +42,8 @@ final class Catalog(val root: String, val spark: SparkSession) {
     * to a plain row count; stages that count a predicate (e.g. non-empty
     * extractions) pass their own aggregate.
     */
-  def writeCounted(table: String, df: DataFrame, partitions: Option[Int] = None,
-      metric: Column = count(lit(1))): Long = {
+  def writeCounted(table: String, df: DataFrame, partitions: Option[Int],
+      metric: Column): Long = {
     val obs = org.apache.spark.sql.Observation()
     val out = partitions.map(n => df.repartition(n)).getOrElse(df)
       .observe(obs, metric.cast("long").as("rows"))
@@ -205,7 +206,7 @@ final class Catalog(val root: String, val spark: SparkSession) {
     * table commit it describes, same as the layout marker; an underscore
     * name keeps parquet readers from touching it.
     */
-  def writeSidecar(table: String, name: String, lines: Seq[String]): Unit = {
+  def writeSidecar(table: String, name: String, lines: => Seq[String]): Unit = {
     require(name.startsWith("_"), s"sidecar name must start with '_': $name")
     val p = new org.apache.hadoop.fs.Path(path(table), name)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -582,6 +583,29 @@ object Catalog {
       cat.appendLineage(LineageRow(runId, stageName, fingerprint, rows, wallMs, finishedAt))
       StageResult(stageName, skipped = false, rows = rows, wallMs = wallMs)
     }
+  }
+
+  private def sha(s: String): String =
+    MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
+      .take(12).map("%02x".format(_)).mkString
+
+  /** Runs a build's stages in order through [[stage]], chaining fingerprints:
+    * the first stage's input fingerprint is `sha(sha(base)/name)`, each
+    * later one `sha(previous/name)` — a changed config or stage order
+    * invalidates every stage after it. An `incr_x` stage merges into the
+    * standing table `x`, so its file metrics are recorded against `x`.
+    */
+  final class StageRunner(cat: Catalog, runId: String, resume: Boolean, base: String) {
+    private var upstream = sha(base)
+    private val done = Vector.newBuilder[StageResult]
+
+    def apply(name: String)(build: Catalog => Long): Unit = {
+      upstream = sha(s"$upstream/$name")
+      done += stage(cat, runId, name, upstream, resume,
+        tableName = name.stripPrefix("incr_"))(build(cat))
+    }
+
+    def results: Vector[StageResult] = done.result()
   }
 }
 

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -78,19 +76,9 @@ object Curate {
     def finalDocs: DataFrame = catalog.read("cur_final")
   }
 
-  private def sha(s: String): String =
-    MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
-      .take(12).map("%02x".format(_)).mkString
-
   def run(spark: SparkSession, cfg: Config): Result = {
     val cat = new Catalog(cfg.outDir, spark)
-    val results = Vector.newBuilder[StageResult]
-    var upstream = sha(cfg.fingerprintBase)
-
-    def stage(name: String)(build: Catalog => Long): Unit = {
-      upstream = sha(s"$upstream/$name")
-      results += Catalog.stage(cat, cfg.runId, name, upstream, cfg.resume)(build(cat))
-    }
+    val stage = new Catalog.StageRunner(cat, cfg.runId, cfg.resume, cfg.fingerprintBase)
 
     stage("cur_docs") { c =>
       val base = CorpusSynth.pages(spark, cfg.corpus).toDF()
@@ -210,7 +198,7 @@ object Curate {
     stage("cur_shards")(c => buildShards(c, cfg))
     stage("cur_final")(c => c.writeCounted("cur_final", c.read("cur_mixture")))
 
-    Result(cat, results.result())
+    Result(cat, stage.results)
   }
 
   private def buildMixture(c: Catalog, cfg: Config): Long = {
@@ -274,14 +262,8 @@ object Curate {
   def runIncremental(spark: SparkSession, cfg: Config, newPages: DataFrame): Result = {
     val cat = new Catalog(cfg.outDir, spark)
     require(cat.exists("cur_docs"), "runIncremental needs a prior full run")
-    val results = Vector.newBuilder[StageResult]
-    var upstream = sha(s"${cfg.fingerprintBase}|incremental|${cfg.runId}")
-
-    def stage(name: String)(build: Catalog => Long): Unit = {
-      upstream = sha(s"$upstream/$name")
-      results += Catalog.stage(cat, cfg.runId, name, upstream, cfg.resume,
-        tableName = name.stripPrefix("incr_"))(build(cat))
-    }
+    val stage = new Catalog.StageRunner(cat, cfg.runId, cfg.resume,
+      s"${cfg.fingerprintBase}|incremental|${cfg.runId}")
 
     val p = Dedup.MinHashParams(jaccardThreshold = cfg.jaccard)
 
@@ -409,6 +391,6 @@ object Curate {
     stage("incr_cur_shards")(c => buildShards(c, cfg))
     stage("incr_cur_final")(c => c.writeCounted("cur_final", c.read("cur_mixture")))
 
-    Result(cat, results.result())
+    Result(cat, stage.results)
   }
 }

@@ -1,8 +1,6 @@
 package graft.pipeline
 
-import java.security.MessageDigest
-
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.chunk.{Chunkers, Chunker}
 import graft.corpus.CorpusSynth
@@ -17,14 +15,16 @@ import graft.resolve.Resolution
   *
   *   pages → docs → chunks → extracted → {entities, entity_types, mentions,
   *   triples} → embeddings → candidate pairs → resolves_to →
-  *   resolved_triples → type_relationships
+  *   resolved_triples → type_relationships → communities →
+  *   community_embeddings
   *
   * The reference's asyncio channels collapse into partition parallelism; its
   * polling barriers (`vertices_have_embedding`, `entities_have_resolution`)
   * collapse into job ordering. Every stage writes its table + a lineage row;
   * `resume = true` skips stages whose table committed under the same input
   * fingerprint — the Spark analogue of the ECC's epoch-lifecycle re-scan
-  * (SURVEY.md §1.4, §2.2).
+  * (SURVEY.md §1.4, §2.2). The stage list is declared once ([[stages]]);
+  * [[run]] commits it to the catalog and [[inMemory]] checkpoints it.
   */
 object Pipeline {
 
@@ -60,7 +60,7 @@ object Pipeline {
     * count ([[Resolution.scaledParams]]; identity below the 65536 floor,
     * so every existing catalog/spec is unchanged).
     */
-  private def erParamsFor(c: Catalog, base: Resolution.Params): Resolution.Params =
+  private def erParamsFor(c: Tables, base: Resolution.Params): Resolution.Params =
     c.readSidecar("lsh_sigs", "_graft_er_params") match {
       case Some(Seq(bands, bits, seed, dim)) =>
         require(seed.toInt == base.seed && dim.toInt == base.dim,
@@ -82,7 +82,7 @@ object Pipeline {
   private def erIndexUsable(c: Catalog): Boolean =
     c.exists("lsh_sigs") && c.readSidecar("lsh_sigs", "_graft_er_params").isDefined
 
-  private def writeErParams(c: Catalog, p: Resolution.Params): Unit =
+  private def writeErParams(c: Tables, p: Resolution.Params): Unit =
     c.writeSidecar("lsh_sigs", "_graft_er_params",
       Seq(p.bands.toString, p.bits.toString, p.seed.toString, p.dim.toString))
 
@@ -94,139 +94,113 @@ object Pipeline {
     }
   }
 
-  private def sha(s: String): String =
-    MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
-      .take(12).map("%02x".format(_)).mkString
-
   def chunkerFor(cfg: Config): Chunker =
     Chunkers.forType(cfg.chunkerType, cfg.characterChunkSize, cfg.characterOverlap)
 
+  /** Full build on the parquet catalog: [[stages]] in order, each committed
+    * with its lineage row, and skipped on `resume` when its fingerprint
+    * committed already.
+    */
   def run(spark: SparkSession, cfg: Config, extractor: Extractor = new RuleExtractor): Result = {
-    import spark.implicits._
     val cat = new Catalog(cfg.outDir, spark)
-    val results = Vector.newBuilder[StageResult]
-    var upstream = sha(cfg.fingerprintBase)
-
-    def stage(name: String)(build: Catalog => Long): Unit = {
-      upstream = sha(s"$upstream/$name")
-      results += Catalog.stage(cat, cfg.runId, name, upstream, cfg.resume)(build(cat))
-    }
-
-    stage("pages") { c =>
-      val pages = CorpusSynth.pages(spark, cfg.corpus)
-      c.writeCounted("pages", pages.toDF(), cfg.shufflePartitions)
-    }
-
-    stage("chunks") { c =>
-      c.writeCounted("chunks", chunkStage(c, cfg, spark, None).toDF())
-    }
-
-    stage("extracted") { c =>
-      val chunks = c.read("chunks").as[Chunk]
-      val extracted = GraphAssembly.extractAll(chunks, extractor)
-      // lineage counts DROPS, not just rows: parse failures are empty docs —
-      // observed during the write, no second scan
-      c.writeCounted("extracted", extracted.toDF(), None,
-        org.apache.spark.sql.functions.expr(
-          "count(CASE WHEN size(nodes) > 0 or size(rels) > 0 THEN 1 END)"))
-    }
-
-    stage("entities") { c =>
-      val extracted = c.read("extracted").as[ExtractedGraphDoc]
-      val ents = GraphAssembly.entities(extracted).toDF()
-      if (cfg.incrementalLayout) c.writeKeyedCounted("entities", ents, Seq("entity_id"), cfg.erBuckets)
-      else c.writeCounted("entities", ents)
-    }
-
-    stage("entity_types") { c =>
-      val extracted = c.read("extracted").as[ExtractedGraphDoc]
-      val et = GraphAssembly.entityTypes(extracted)
-      if (cfg.incrementalLayout)
-        c.writeKeyedCounted("entity_types", et, Seq("entity_id", "type_id"), cfg.erBuckets)
-      else c.writeCounted("entity_types", et)
-    }
-
-    stage("mentions") { c =>
-      val extracted = c.read("extracted").as[ExtractedGraphDoc]
-      c.writeCounted("mentions", GraphAssembly.mentions(extracted).toDF())
-    }
-
-    stage("triples") { c =>
-      val extracted = c.read("extracted").as[ExtractedGraphDoc]
-      c.writeCounted("triples", GraphAssembly.triples(extracted).toDF(), cfg.shufflePartitions)
-    }
-
-    stage("embeddings") { c =>
-      val entities = c.read("entities").as[Entity]
-      val emb = Resolution.embedEntities(entities, cfg.er)
-      if (cfg.incrementalLayout) c.writeKeyedCounted("embeddings", emb, Seq("entity_id"), cfg.erBuckets)
-      else c.writeCounted("embeddings", emb)
-    }
-
-    // persisted sign-RP blocking index — incremental runs re-sign only
-    // changed entities and join the delta against this table
-    if (cfg.incrementalLayout) stage("lsh_sigs") { c =>
-      // full index rebuild: derive the blocking geometry fresh from the
-      // current corpus size and pin it beside the index for later readers
-      val pEff = Resolution.scaledParams(cfg.er, c.read("embeddings").count())
-      val n = c.writeKeyedCounted("lsh_sigs",
-        Resolution.signatures(c.read("embeddings"), pEff),
-        Seq("entity_id", "band"), cfg.erBuckets)
-      writeErParams(c, pEff)
-      n
-    }
-
-    // every DocumentChunk is embedded (`ecc/app/graphrag/workers.py:115-117`,
-    // embed worker :175-206) — these vectors feed Q2/Q3/Q5 vector retrieval
-    stage("chunk_embeddings") { c =>
-      val chunks = c.read("chunks")
-      c.writeCounted("chunk_embeddings",
-        graft.extract.Embeddings.embedText(chunks, "chunk_id", "text", cfg.er.dim),
-        cfg.shufflePartitions)
-    }
-
-    stage("candidate_pairs") { c =>
-      val emb = c.read("embeddings")
-      val pairs = Resolution.candidatePairs(emb, erParamsFor(c, cfg.er))
-      if (cfg.incrementalLayout) c.writeKeyedCounted("candidate_pairs", pairs, Seq("src"), cfg.erBuckets)
-      else c.writeCounted("candidate_pairs", pairs)
-    }
-
-    stage("resolves_to") { c =>
-      val entities = c.read("entities").as[Entity]
-      val pairs = c.read("candidate_pairs")
-      c.writeCounted("resolves_to", Resolution.resolvesTo(entities, pairs).toDF())
-    }
-
-    stage("resolved_triples") { c =>
-      val triples = c.read("triples").as[Triple]
-      val res = c.read("resolves_to").as[ResolvesTo]
-      c.writeCounted("resolved_triples", Lift.resolvedTriples(triples, res).toDF(),
-        cfg.shufflePartitions)
-    }
-
-    stage("type_relationships") { c =>
-      val triples = c.read("triples").as[Triple]
-      val types = c.read("entity_types")
-      c.writeCounted("type_relationships", Lift.typeRelationships(triples, types).toDF())
-    }
-
-    stage("communities")(c => buildCommunities(c, spark))
-
-    // community summaries are embedded like the reference's embed pass over
-    // community descriptions (`workers.py:530-560`) — Q4 vector seeding
-    stage("community_embeddings")(c => buildCommunityEmbeddings(c, cfg))
-
-    Result(cat, results.result())
+    val stage = new Catalog.StageRunner(cat, cfg.runId, cfg.resume, cfg.fingerprintBase)
+    stages(spark, cfg, extractor).foreach(s => stage(s.name)(s.build))
+    Result(cat, stage.results)
   }
 
-  /** Chunking over the pages table — shared by [[run]] and
-    * [[runIncremental]]. When the input table carries a `ctype` column the
-    * chunker is dispatched PER DOCUMENT (reference `workers.py:89-96`:
-    * the Content vertex's ctype attribute selects the chunker, falling back
-    * to the config default) — a mixed html/markdown corpus chunks
-    * faithfully. Without the column, one global chunker applies as before.
+  /** The full build held in memory over `corpus` with the default config —
+    * the same stage list as [[run]], no table writes.
     */
+  def inMemory(spark: SparkSession, corpus: CorpusSynth.Config,
+      onStage: (String, () => Unit) => Unit = InMemoryStages.runStage): InMemoryStages =
+    new InMemoryStages(spark, stages(spark, Config(corpus = corpus)), onStage)
+
+  /** The full-build stage list, in run order: pages through
+    * community_embeddings, plus the lsh_sigs blocking index under
+    * `incrementalLayout`.
+    */
+  def stages(spark: SparkSession, cfg: Config,
+      extractor: Extractor = new RuleExtractor): Seq[Stage] = {
+    import spark.implicits._
+    def extracted(t: Tables) = t.read("extracted").as[ExtractedGraphDoc]
+    // MERGE targets of runIncremental take the bucketed layout when asked
+    def keyed(t: Tables, table: String, df: DataFrame, key: String*): Long =
+      if (cfg.incrementalLayout) t.writeKeyedCounted(table, df, key, cfg.erBuckets)
+      else t.writeCounted(table, df)
+
+    Seq(
+      Stage("pages", Nil) { t =>
+        t.writeCounted("pages", CorpusSynth.pages(spark, cfg.corpus).toDF(), cfg.shufflePartitions)
+      },
+      Stage("chunks", Seq("pages")) { t =>
+        t.writeCounted("chunks", chunkStage(t, cfg, spark, None).toDF())
+      },
+      Stage("extracted", Seq("chunks")) { t =>
+        val extracted = GraphAssembly.extractAll(t.read("chunks").as[Chunk], extractor)
+        // lineage counts DROPS, not just rows: parse failures are empty docs —
+        // observed during the write, no second scan
+        t.writeCounted("extracted", extracted.toDF(), None,
+          org.apache.spark.sql.functions.expr(
+            "count(CASE WHEN size(nodes) > 0 or size(rels) > 0 THEN 1 END)"))
+      },
+      Stage("entities", Seq("extracted")) { t =>
+        keyed(t, "entities", GraphAssembly.entities(extracted(t)).toDF(), "entity_id")
+      },
+      Stage("entity_types", Seq("extracted")) { t =>
+        keyed(t, "entity_types", GraphAssembly.entityTypes(extracted(t)), "entity_id", "type_id")
+      },
+      Stage("mentions", Seq("extracted")) { t =>
+        t.writeCounted("mentions", GraphAssembly.mentions(extracted(t)).toDF())
+      },
+      Stage("triples", Seq("extracted")) { t =>
+        t.writeCounted("triples", GraphAssembly.triples(extracted(t)).toDF(), cfg.shufflePartitions)
+      },
+      Stage("embeddings", Seq("entities")) { t =>
+        keyed(t, "embeddings", Resolution.embedEntities(t.read("entities").as[Entity], cfg.er),
+          "entity_id")
+      }) ++
+    // persisted sign-RP blocking index — incremental runs re-sign only
+    // changed entities and join the delta against this table
+    (if (!cfg.incrementalLayout) Nil else Seq(Stage("lsh_sigs", Seq("embeddings")) { t =>
+      // full index rebuild: derive the blocking geometry fresh from the
+      // current corpus size and pin it beside the index for later readers
+      val pEff = Resolution.scaledParams(cfg.er, t.read("embeddings").count())
+      val n = t.writeKeyedCounted("lsh_sigs",
+        Resolution.signatures(t.read("embeddings"), pEff),
+        Seq("entity_id", "band"), cfg.erBuckets)
+      writeErParams(t, pEff)
+      n
+    })) ++ Seq(
+      // every DocumentChunk is embedded (`ecc/app/graphrag/workers.py:115-117`,
+      // embed worker :175-206) — these vectors feed Q2/Q3/Q5 vector retrieval
+      Stage("chunk_embeddings", Seq("chunks")) { t =>
+        t.writeCounted("chunk_embeddings",
+          graft.extract.Embeddings.embedText(t.read("chunks"), "chunk_id", "text", cfg.er.dim),
+          cfg.shufflePartitions)
+      },
+      Stage("candidate_pairs", Seq("embeddings")) { t =>
+        keyed(t, "candidate_pairs",
+          Resolution.candidatePairs(t.read("embeddings"), erParamsFor(t, cfg.er)), "src")
+      },
+      Stage("resolves_to", Seq("entities", "candidate_pairs")) { t =>
+        t.writeCounted("resolves_to", Resolution.resolvesTo(t.read("entities").as[Entity],
+          t.read("candidate_pairs")).toDF())
+      },
+      Stage("resolved_triples", Seq("triples", "resolves_to")) { t =>
+        t.writeCounted("resolved_triples", Lift.resolvedTriples(t.read("triples").as[Triple],
+          t.read("resolves_to").as[ResolvesTo]).toDF(), cfg.shufflePartitions)
+      },
+      Stage("type_relationships", Seq("triples", "entity_types")) { t =>
+        t.writeCounted("type_relationships",
+          Lift.typeRelationships(t.read("triples").as[Triple], t.read("entity_types")).toDF())
+      },
+      Stage("communities", Seq("resolved_triples", "resolves_to", "entities"),
+        Seq("in_community", "has_parent", "links_to", "modularity"))(t => buildCommunities(t, spark)),
+      // community summaries are embedded like the reference's embed pass over
+      // community descriptions (`workers.py:530-560`) — Q4 vector seeding
+      Stage("community_embeddings", Seq("communities"))(t => buildCommunityEmbeddings(t, cfg)))
+  }
+
   /** Delta-keyed fetch of standing rows: when the table's recorded bucket
     * layout matches `key`, [[Catalog.lookup]] prunes the read to the buckets
     * the delta keys hash into (O(delta) I/O); flat / differently-keyed
@@ -238,7 +212,14 @@ object Pipeline {
     if (c.bucketLayout(table).exists(_._1 == key)) c.lookup(table, keys)
     else c.read(table).join(keys, key, "left_semi")
 
-  private def chunkStage(c: Catalog, cfg: Config, spark: SparkSession,
+  /** Chunking over the pages table — shared by [[stages]] and
+    * [[runIncremental]]. When the input table carries a `ctype` column the
+    * chunker is dispatched PER DOCUMENT (reference `workers.py:89-96`:
+    * the Content vertex's ctype attribute selects the chunker, falling back
+    * to the config default) — a mixed html/markdown corpus chunks
+    * faithfully. Without the column, one global chunker applies as before.
+    */
+  private def chunkStage(c: Tables, cfg: Config, spark: SparkSession,
       deltaDocIds: Option[org.apache.spark.sql.DataFrame]): Dataset[graft.model.Chunk] = {
     import spark.implicits._
     val pagesDf = c.read("pages")
@@ -263,7 +244,7 @@ object Pipeline {
     * summaries' inputs). Same overflow-safe decimal(38,0) xxhash64-sum the
     * driver-contract digests use.
     */
-  private def communityInputsDigest(c: Catalog): String = {
+  private def communityInputsDigest(c: Tables): String = {
     import org.apache.spark.sql.functions._
     def dig(df: org.apache.spark.sql.DataFrame): String = {
       val canon = df.columns.map(n => coalesce(col(n).cast("string"), lit("\u0000NULL")))
@@ -293,7 +274,7 @@ object Pipeline {
     * O(Louvain + summaries). The digest is written as a sidecar after every
     * rebuild so the next pass can compare.
     */
-  private def buildCommunities(c: Catalog, spark: SparkSession,
+  private def buildCommunities(c: Tables, spark: SparkSession,
       inputsDigest: Option[String] = None): Long = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit}
@@ -323,7 +304,7 @@ object Pipeline {
     nComms
   }
 
-  private def buildCommunityEmbeddings(c: Catalog, cfg: Config): Long = {
+  private def buildCommunityEmbeddings(c: Tables, cfg: Config): Long = {
     val comms = c.read("communities").na.fill("", Seq("description"))
     c.writeCounted("community_embeddings",
       graft.extract.Embeddings.embedText(comms, "community_id", "description", cfg.er.dim))
@@ -363,16 +344,8 @@ object Pipeline {
     import org.apache.spark.sql.functions._
     val cat = new Catalog(cfg.outDir, spark)
     require(cat.exists("pages"), "runIncremental needs a prior full run (pages table missing)")
-    val results = Vector.newBuilder[StageResult]
-    var upstream = Pipeline.sha(s"${cfg.fingerprintBase}|incremental|${cfg.runId}")
-
-    def stage(name: String)(build: Catalog => Long): Unit = {
-      upstream = Pipeline.sha(s"$upstream/$name")
-      // incr_* stages merge into the standing table of the same base name —
-      // per-partition metrics are recorded against that table
-      results += Catalog.stage(cat, cfg.runId, name, upstream, cfg.resume,
-        tableName = name.stripPrefix("incr_"))(build(cat))
-    }
+    val stage = new Catalog.StageRunner(cat, cfg.runId, cfg.resume,
+      s"${cfg.fingerprintBase}|incremental|${cfg.runId}")
 
     /** extraction rows of this run's delta chunks */
     def deltaExtracted(c: Catalog): Dataset[ExtractedGraphDoc] = {
@@ -563,6 +536,6 @@ object Pipeline {
       else buildCommunityEmbeddings(c, cfg)
     }
 
-    Result(cat, results.result())
+    Result(cat, stage.results)
   }
 }

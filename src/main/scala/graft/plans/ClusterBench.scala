@@ -2,8 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
 import graft.corpus.CorpusSynth
+import graft.pipeline.Pipeline
 
 /** True multi-executor KG-construction benchmark — the literal form of the
   * north rule's "run via spark-submit at N and 4N executors": unlike
@@ -60,22 +60,20 @@ object ClusterBench {
     // warmup (JIT + codegen caches): with N separate executor JVMs each one
     // must JIT the whole chain independently — a toy warmup leaves the first
     // measured sample 3-8x slow. One-tenth of the real corpus exercises the
-    // same codegen + AQE paths at material task sizes (louvain forced too —
-    // the full-pipeline wall below measures it).
-    val warm = SparkEntry.KgStages(spark, cfg.copy(nPages = math.max(2000, pages / 10)))
-    warm.resolvedTriples.count()
-    warm.louvain.levels.foreach(_.membership.count())
+    // same codegen + AQE paths at material task sizes (every table of the
+    // stage list — the full-pipeline wall below measures them all).
+    Pipeline.inMemory(spark, cfg.copy(nPages = math.max(2000, pages / 10))).buildAll()
 
-    // each sample times the chain AND the full pipeline (chain + community
-    // hierarchy, the r5 headline definition) in one pass — the communities
-    // increment is the wall delta on the same stage graph
+    // each sample times the chain AND the full pipeline (every table of the
+    // stage list) in one pass — the rest-of-list increment is the wall
+    // delta on the same stage graph
     var triples = 0L
     val runs = (1 to samples).map { _ =>
       val s0 = stealTicks(); val t0 = System.nanoTime()
-      val st = SparkEntry.KgStages(spark, cfg)
-      triples = st.resolvedTriples.count()
+      val st = Pipeline.inMemory(spark, cfg)
+      triples = st.read("resolved_triples").count()
       val tChain = (System.nanoTime() - t0) / 1e9
-      st.louvain.levels.foreach(_.membership.count())
+      st.buildAll()
       val tFull = (System.nanoTime() - t0) / 1e9
       (tChain, tFull, (stealTicks() - s0) / 100.0)
     }

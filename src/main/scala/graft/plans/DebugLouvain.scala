@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.community.Louvain
 import graft.corpus.CorpusSynth
@@ -27,15 +27,22 @@ object DebugLouvain {
       r
     }
     val cfg = CorpusSynth.Config(nPages = pages, nClusters = math.max(12, pages / 25))
-    val st = graft.SparkEntry.KgStages(spark, cfg)
-    val lifted = time("chain_through_lift") { st.resolvedTriples.toDF().localCheckpoint(true) }
-    val res = time("resolves_to") { st.resolvesTo.toDF().localCheckpoint(true) }
+    val st = graft.pipeline.Pipeline.inMemory(spark, cfg)
+    val lifted = time("chain_through_lift") { st.read("resolved_triples") }
+    val res = st.read("resolves_to")
+    // localFinishEdges = 0 keeps localMoving on the distributed hop loop for
+    // any graph with an edge (every call here has m > 0), so the label names
+    // the route it times
+    def localMoving(it: Int, n: DataFrame, e: DataFrame, m: Double) =
+      time(f"localMoving_L$it[distributed](e=${e.count()})") {
+        Louvain.localMoving(n, e, m, localFinishEdges = 0L).localCheckpoint(true)
+      }
 
     val (nodes0, edges0, m0) = time("initGraph") {
       val g = Louvain.initGraph(lifted)
       g._1.count(); g
     }
-    val labels = time("localMoving_L1") { Louvain.localMoving(nodes0, edges0, m0).localCheckpoint(true) }
+    val labels = localMoving(1, nodes0, edges0, m0)
     val lvl = time("coarsen_L1") {
       val l = Louvain.coarsen(labels, edges0, 1)
       l.membership.count(); l.linksTo.count(); l
@@ -56,10 +63,7 @@ object DebugLouvain {
       val (n, e, m) = Louvain.levelGraph(allLevels.last.linksTo)
       if (m <= 1e-11) continue = false
       else {
-        val nEdges = e.count()
-        val lbl = time(f"localMoving_L$it(e=$nEdges)") {
-          Louvain.localMoving(n, e, m).localCheckpoint(true)
-        }
+        val lbl = localMoving(it, n, e, m)
         import org.apache.spark.sql.functions.col
         val prevComms = allLevels.last.communities.select(col("community_id").as("id"))
         val lblAll = lbl.select(col("id"), col("comm")).unionByName(

@@ -38,9 +38,9 @@ object EnduranceBench {
 
   final class SpillListener extends SparkListener {
     val stages: TrieMap[Int, StageAgg] = TrieMap.empty
-    /** Set by the profile driver before each logical stage — an anonymous
+    /** Set by the stage hook before each logical stage — an anonymous
       * AQE-lambda Spark stage name attributes to the pipeline stage that
-      * launched it (eager checkpoints between stages keep windows honest).
+      * launched it (each stage's checkpointed outputs keep windows honest).
       */
     @volatile var currentLogical: String = "setup"
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -97,12 +97,19 @@ object EnduranceBench {
     val cfg = CorpusSynth.Config(nPages = pages, nClusters = math.max(12, pages / 25))
     val rssBefore = rssMb()
     val t0 = System.nanoTime()
-    // stage-by-stage (BenchProfile) rather than the fused KgStages chain:
-    // the eager checkpoint between stages is what lets per-stage spill
-    // attribute cleanly; walls stay comparable (attribution tool, not the
-    // headline number — graft.Bench owns that)
-    val (n, stageWalls) = BenchProfile.profile(spark, cfg,
-      listener.currentLogical = _, includeCommunities = true)
+    // the pipeline's stage list in memory, every table built: its stage
+    // hook names the logical stage for spill attribution and times it
+    // (attribution tool, not the headline number — graft.Bench owns that)
+    val walls = Vector.newBuilder[(String, Double)]
+    val kg = graft.pipeline.Pipeline.inMemory(spark, cfg, (name, build) => {
+      listener.currentLogical = name
+      val ts = System.nanoTime()
+      build()
+      walls += name -> (System.nanoTime() - ts) / 1e9
+    })
+    kg.buildAll()
+    val n = kg.read("resolved_triples").count()
+    val stageWalls = walls.result()
     val wall = (System.nanoTime() - t0) / 1e9
     spark.sparkContext.removeSparkListener(listener)
     val rssAfter = rssMb()

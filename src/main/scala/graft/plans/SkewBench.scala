@@ -61,7 +61,7 @@ object SkewBench {
     val listener = new TaskTimeListener
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val n = graft.SparkEntry.KgStages(spark, cfg).resolvedTriples.count()
+    val n = graft.pipeline.Pipeline.inMemory(spark, cfg).read("resolved_triples").count()
     val wall = (System.nanoTime() - t0) / 1e9
     spark.sparkContext.removeSparkListener(listener)
     val rows = listener.durations.toVector.flatMap { case (sid, buf) =>
